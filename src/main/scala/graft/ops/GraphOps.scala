@@ -119,8 +119,10 @@ object GraphOps {
     val edges = pinned(rawEdges)
     // one action on the pinned list decides the strategy — the same
     // measured-size-driven switch AQE makes, but against the EDGE count,
-    // which AQE cannot see past the wedge join's own output statistics
-    val m = edges.count()
+    // which AQE cannot see past the wedge join's own output statistics.
+    // A failed probe releases the pin; above the gate the joined plan
+    // keeps it (the GraphX cache-the-graph idiom).
+    val m = try edges.count() catch { case t: Throwable => edges.unpersist(false); throw t }
     if (m <= BROADCAST_EDGE_LIMIT) triangleCountsIndexed(edges)
     else triangleCountsJoined(edges)
   }
@@ -167,13 +169,13 @@ object GraphOps {
   /** Under-gate path: broadcast the CSR index, intersect neighbor lists
     * distributed over hash-spread node ranges, partial-aggregate the
     * emitted triangle corners. The collect is gate-bounded (≤ 64 MB); the
-    * edge pin is released as soon as the collect lands. */
+    * edge pin is released as soon as the collect lands or fails. */
   private def triangleCountsIndexed(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val ev = edges.select(col("u").cast("long"), col("v").cast("long"))
+    val ev = try edges.select(col("u").cast("long"), col("v").cast("long"))
       .as[(Long, Long)].collect()
-    edges.unpersist(false)
+    finally edges.unpersist(false)
     val (rankToId, offs, nbrs) = csrOriented(ev)
     val n = rankToId.length
     val bc = spark.sparkContext.broadcast((rankToId, offs, nbrs))
@@ -263,19 +265,15 @@ object GraphOps {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    val m = e.count()
-    if (m <= BROADCAST_EDGE_LIMIT) {
-      val ev = e.as[(Long, Long)].collect()
-      e.unpersist(false)
-      spark.createDataset(localComponents(ev).toIndexedSeq)
-        .toDF("n", "component")
-    } else {
-      val out = distributedComponents(e, maxIter)
-      // the loop's first localCheckpoint has materialized sym, so the pin
-      // has served its purpose (round-7 VERDICT #4: no pins left behind)
-      e.unpersist(false)
-      out
-    }
+    // released however the gate's probe and collect end; above the gate
+    // the loop's first localCheckpoint has materialized sym, so the pin
+    // has served its purpose (round-7 VERDICT #4: no pins left behind)
+    try {
+      if (e.count() <= BROADCAST_EDGE_LIMIT)
+        spark.createDataset(localComponents(e.as[(Long, Long)].collect()).toIndexedSeq)
+          .toDF("n", "component")
+      else distributedComponents(e, maxIter)
+    } finally e.unpersist(false)
   }
 
   /** Driver-local union-find (path-compressed, union by size, min-id label
@@ -404,20 +402,17 @@ object GraphOps {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    val m = e.count()
-    if (m <= BROADCAST_EDGE_LIMIT) {
-      val ev = e.as[(Long, Long)].collect()
-      e.unpersist(false)
-      spark.createDataset(
-          localPageRankCredits(ev, iters, seed, dampNum, dampDen).toIndexedSeq)
-        .toDF("n", "c")
-    } else {
-      // above the gate the joined pipeline re-derives from the raw edges
-      // (unchanged round-7 shape: per-hop exchange reuse, no pin — a cache
-      // was measured SLOWER than recompute here, 2.36 s vs 1.67 s at sf0.1)
-      e.unpersist(false)
-      pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen)
-    }
+    // released however the gate's probe and collect end; above the gate
+    // the joined pipeline re-derives from the raw edges (unchanged
+    // round-7 shape: per-hop exchange reuse, no pin — a cache was
+    // measured SLOWER than recompute here, 2.36 s vs 1.67 s at sf0.1)
+    try {
+      if (e.count() <= BROADCAST_EDGE_LIMIT)
+        spark.createDataset(localPageRankCredits(e.as[(Long, Long)].collect(),
+            iters, seed, dampNum, dampDen).toIndexedSeq)
+          .toDF("n", "c")
+      else pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen)
+    } finally e.unpersist(false)
   }
 
   /** Driver-local integer-credit hops over int-interned nodes; bounded by

@@ -476,7 +476,7 @@ object KgOracleGen {
       .flatMap { nrm =>
         val nsh = EntityLinking.shingles(nrm)
         val scored = dictRows
-          .map(d => (EntityLinking.jaccard(nsh, EntityLinking.shingles(d.surface)),
+          .map(d => (graft.ops.DedupOps.jaccardSets(nsh, EntityLinking.shingles(d.surface)),
             d.entity_iri))
           .filter(_._1 >= EntityLinking.JACCARD_THRESHOLD)
         if (scored.isEmpty) Nil else List(nrm -> scored.max._2)

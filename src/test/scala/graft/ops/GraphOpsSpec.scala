@@ -188,6 +188,20 @@ class GraphOpsSpec extends AnyFunSuite {
       s"net pinned-RDD increase after gated graph ops: $before -> $after")
   }
 
+  test("gated operators release the edge pin when the collect throws") {
+    import spark.implicits._
+    // a null endpoint passes the count probe but cannot decode into the
+    // collect's (Long, Long) rows, so every gate fails between probe and
+    // collect — after the pin is taken
+    val bad = Seq((Option(1L), 2L), (Option.empty[Long], 3L)).toDF("u", "v")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    intercept[Exception](GraphOps.triangleCounts(bad))
+    intercept[Exception](GraphOps.connectedComponents(bad))
+    intercept[Exception](GraphOps.pageRankCredits(bad))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"pinned RDDs left behind by failed collects: $leaked")
+  }
+
   test("triangle plan: keyed equi-joins only, no cartesian product") {
     // the above-gate join pipeline is the shape that must never degenerate
     val plan = GraphOps.triangleCountsJoined(edges)
