@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{BoundedMinK, GraphOps, Par}
 
@@ -20,188 +19,11 @@ object OptLab {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = kg.KgPipeline.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
-    val which = if (args.nonEmpty) args(0) else "tri"
+    val which = if (args.nonEmpty) args(0) else "finalplan"
     val reps =
       if (args.length > 1 && args(1).forall(_.isDigit)) args(1).toInt else 2
 
-    def edges(): DataFrame = GraphOps.coOccurrenceEdges(
-      spark.read.parquet(s"$sfDir/lineitem.parquet"), "l_orderkey", "l_partkey")
-
     which match {
-      case "tri" =>
-        for (rep <- 1 to reps) {
-          println(s"--- rep $rep")
-          val e = if (args.length > 2 && args(2) == "repart")
-            edges().repartition(cpus, col("u"), col("v"))
-          else edges()
-          val pinnedE = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = time("pin edges + count") { pinnedE.count() }
-          println(s"  pinned edges partitions = ${pinnedE.rdd.getNumPartitions}")
-          val deg = GraphOps.degrees(pinnedE)
-          time("degrees.count") { deg.count() }
-          val withDeg = pinnedE
-            .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
-            .join(deg.select(col("n").as("v"), col("deg").as("dv")), "v")
-          val uLower = col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v"))
-          val oriented = withDeg.select(
-            when(uLower, col("u")).otherwise(col("v")).as("s"),
-            when(uLower, col("v")).otherwise(col("u")).as("d"),
-            when(uLower, col("dv")).otherwise(col("du")).as("dd"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          time("oriented build (SMJ x2) + count") { oriented.count() }
-          println(s"  oriented partitions = ${oriented.rdd.getNumPartitions}")
-          val e1 = oriented.select(col("s"), col("d").as("d1"), col("dd").as("dd1"))
-          val e2 = oriented.select(col("s"), col("d").as("d2"), col("dd").as("dd2"))
-          val wedges = e1.join(broadcast(e2), "s")
-            .filter(col("dd1") < col("dd2") ||
-              (col("dd1") === col("dd2") && col("d1") < col("d2")))
-            .select(col("s"), col("d1"), col("d2"))
-          time("wedges.count") { wedges.count() }
-          val closing = oriented.select(col("s").as("d1"), col("d").as("d2"))
-          val triangles = wedges.join(broadcast(closing), Seq("d1", "d2"))
-          val res = triangles
-            .select(explode(array(col("s"), col("d1"), col("d2"))).as("n"))
-            .groupBy(col("n")).agg(count(lit(1)).as("n_triangles"))
-          time("full triangle tail (wedge+close+agg)") { res.count() }
-          pinnedE.unpersist(true); oriented.unpersist(true)
-          println(s"m=$m")
-        }
-      case "tri2" =>
-        for (rep <- 1 to reps) {
-          println(s"--- rep $rep")
-          val pinnedE = edges().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = time("pin edges + count") { pinnedE.count() }
-          val deg = GraphOps.degrees(pinnedE)
-          val withDeg = pinnedE
-            .join(broadcast(deg.select(col("n").as("u"), col("deg").as("du"))), "u")
-            .join(broadcast(deg.select(col("n").as("v"), col("deg").as("dv"))), "v")
-          val uLower = col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v"))
-          val oriented = withDeg.select(
-            when(uLower, col("u")).otherwise(col("v")).as("s"),
-            when(uLower, col("v")).otherwise(col("u")).as("d"),
-            when(uLower, col("dv")).otherwise(col("du")).as("dd"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          time("oriented build (BHJ x2) + count") { oriented.count() }
-          // adjacency: out-neighbors sorted by (dd, d) rank
-          val adj = oriented.groupBy(col("s"))
-            .agg(sort_array(collect_list(struct(col("dd"), col("d")))).as("nb"))
-          val wedges = adj
-            .select(col("s"), posexplode(col("nb")).as(Seq("i", "x1")), col("nb"))
-            .select(col("s"), col("x1.d").as("d1"),
-              explode(slice(col("nb"), col("i") + lit(2), size(col("nb")))).as("x2"))
-            .select(col("s"), col("d1"), col("x2.d").as("d2"))
-          time("adj wedges.count") { wedges.count() }
-          val closing = oriented.select(col("s").as("d1"), col("d").as("d2"))
-          val res = wedges.join(broadcast(closing), Seq("d1", "d2"))
-            .select(explode(array(col("s"), col("d1"), col("d2"))).as("n"))
-            .groupBy(col("n")).agg(count(lit(1)).as("n_triangles"))
-          time("adj tail (wedge+close+agg)") { res.count() }
-          pinnedE.unpersist(true); oriented.unpersist(true)
-          println(s"m=$m")
-        }
-      case "tri3" =>
-        for (rep <- 1 to reps) {
-          println(s"--- rep $rep")
-          import spark.implicits._
-          val pinnedE = edges().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = time("pin edges + count") { pinnedE.count() }
-          val ev = time("collect edges") {
-            pinnedE.select(col("u").cast("long"), col("v").cast("long"))
-              .as[(Long, Long)].collect()
-          }
-          val (rankToId, offs, nbrs) = time("driver adjacency build") {
-            // degree per node
-            val degm = new java.util.HashMap[Long, Int]()
-            ev.foreach { case (u, v) =>
-              degm.merge(u, 1, _ + _); degm.merge(v, 1, _ + _)
-            }
-            val n = degm.size
-            val ids = new Array[Long](n)
-            var i = 0
-            val it = degm.keySet().iterator()
-            while (it.hasNext) { ids(i) = it.next(); i += 1 }
-            // rank = position in ascending (degree, id)
-            val sorted = ids.sortBy(id => (degm.get(id), id))
-            val rankOf = new java.util.HashMap[Long, Int](n * 2)
-            i = 0
-            while (i < n) { rankOf.put(sorted(i), i); i += 1 }
-            // out-degree per rank (edge oriented low rank -> high rank)
-            val outDeg = new Array[Int](n)
-            ev.foreach { case (u, v) =>
-              val ru = rankOf.get(u); val rv = rankOf.get(v)
-              if (ru < rv) outDeg(ru) += 1 else outDeg(rv) += 1
-            }
-            val offs = new Array[Int](n + 1)
-            i = 0
-            while (i < n) { offs(i + 1) = offs(i) + outDeg(i); i += 1 }
-            val nbrs = new Array[Int](ev.length)
-            val fill = java.util.Arrays.copyOf(offs, n)
-            ev.foreach { case (u, v) =>
-              val ru = rankOf.get(u); val rv = rankOf.get(v)
-              val (s, d) = if (ru < rv) (ru, rv) else (rv, ru)
-              nbrs(fill(s)) = d; fill(s) += 1
-            }
-            i = 0
-            while (i < n) {
-              java.util.Arrays.sort(nbrs, offs(i), offs(i + 1)); i += 1
-            }
-            (sorted, offs, nbrs)
-          }
-          val res = time("distributed count + agg") {
-            val n = rankToId.length
-            val bcAdj = spark.sparkContext.broadcast((rankToId, offs, nbrs))
-            val corners = spark.range(0, n.toLong)
-              .repartition(cpus, col("id"))
-              .as[Long]
-              .mapPartitions { ranks =>
-                val (ids, of, nb) = bcAdj.value
-                ranks.flatMap { sL =>
-                  val s = sL.toInt
-                  val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-                  var i = of(s)
-                  while (i < of(s + 1)) {
-                    val d1 = nb(i)
-                    // merge-intersect nb[of(s)..of(s+1)) with nb[of(d1)..of(d1+1))
-                    var a = of(s); var b = of(d1)
-                    while (a < of(s + 1) && b < of(d1 + 1)) {
-                      val x = nb(a); val y = nb(b)
-                      if (x == y) {
-                        out += ids(s); out += ids(d1); out += ids(x)
-                        a += 1; b += 1
-                      } else if (x < y) a += 1 else b += 1
-                    }
-                    i += 1
-                  }
-                  out.iterator
-                }
-              }.toDF("n")
-              .groupBy(col("n")).agg(count(lit(1)).as("n_triangles"))
-            val c = corners.count()
-            bcAdj.destroy()
-            c
-          }
-          pinnedE.unpersist(true)
-          println(s"m=$m res_rows=$res")
-        }
-      case "final" =>
-        // run a named query and print its FINAL adaptive plan node census
-        val name = args(1)
-        val fn = SparkEntry.queries(name)
-        for (rep <- 1 to (if (args.length > 2) args(2).toInt else 2)) {
-          // construction + count together — the bench times both
-          val df = time(s"$name construct+count") {
-            val d = fn(spark, sfDir); d.count(); d
-          }
-          val fin = df.queryExecution.executedPlan.toString
-          val finalPart = fin.split("== Initial Plan ==")(0)
-          def c(p: String) = p.r.findAllIn(finalPart).length
-          println(s"  final plan: MapPartitions=${c("MapPartitions")} " +
-            s"ReusedExchange=${c("ReusedExchange")} Exchange=${c("Exchange")} " +
-            s"SMJ=${c("SortMergeJoin")} BHJ=${c("BroadcastHashJoin")} " +
-            s"Generate=${c("Generate")}")
-        }
       case "kgem" =>
         import graft.kg.{EntityLinking, Materialize, Model, PagesSource, TripleExtraction}
         import graft.ops.SkewOps

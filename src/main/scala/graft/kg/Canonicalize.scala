@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model.TripleRow
+import graft.ops.Gate
 
 /** Entity canonicalization via connected components over owl:sameAs edges
   * (SURVEY.md §2.5): iterative DataFrame hash-min label propagation —
@@ -74,13 +75,10 @@ object Canonicalize {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val probe = edges.select($"src", $"dst").distinct()
-      .limit(LOCAL_CC_MAX_EDGES + 1)
-      .as[(String, String)].collect()
-    if (probe.length <= LOCAL_CC_MAX_EDGES) {
-      spark.createDataset(localUnionFind(probe).toSeq)
-        .toDF("id", "canonical")
-    } else distributedCC(edges, maxIter)
+    Gate.localOr(edges.select($"src", $"dst").distinct().as[(String, String)],
+        LOCAL_CC_MAX_EDGES) { probe =>
+      spark.createDataset(localUnionFind(probe).toSeq).toDF("id", "canonical")
+    }(distributedCC(edges, maxIter))
   }
 
   /** The distributed hash-min loop (taken above LOCAL_CC_MAX_EDGES; directly

@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model._
+import graft.ops.Gate
 
 /** Mention detection + dictionary entity linking (SURVEY.md §2.5).
   *
@@ -139,16 +140,11 @@ object EntityLinking {
     val spark = mentions.sparkSession
     import spark.implicits._
 
-    // ONE capped collect doubles as the size-gate probe AND the data fetch
-    // (CollectLimit over the map-side-combined distinct short-circuits)
     val distinctSurfaces = mentions.select($"surface").distinct()
     val surfaceMap: DataFrame =
-      localMapUnderGate(distinctSurfaces.limit(maxLocal + 1).as[String].collect(),
-          dict, maxLocal) match {
-        case Some(m) =>
-          broadcast(spark.createDataset(m.toSeq).toDF("surface", "entity_iri", "method"))
-        case None => distributedSurfaceMap(distinctSurfaces, dict)
-      }
+      localMapUnderGate(distinctSurfaces.as[String], identity[String], dict, maxLocal) {
+        (_, m) => broadcast(spark.createDataset(m.toSeq).toDF("surface", "entity_iri", "method"))
+      }(distributedSurfaceMap(distinctSurfaces, dict))
 
     // ONE pass over the mention occurrence stream: a broadcast hash probe
     // on the raw surface string — no normalize, no lambdas.
@@ -170,30 +166,27 @@ object EntityLinking {
     import spark.implicits._
     val dict = PagesSource.dictionary(spark)
     val hist = mentions(triples).groupBy($"surface").count()
-    val probe = hist.limit(maxLocal + 1).as[(String, Long)].collect()
-    localMapUnderGate(probe.map(_._1), dict, maxLocal) match {
-      case Some(m) =>
+    localMapUnderGate(hist.as[(String, Long)], (_: (String, Long))._1, dict, maxLocal) {
+      (probe, m) =>
         val rowsPer = m.groupMapReduce(_._1)(_ => 1L)(_ + _)
         probe.iterator.map { case (s, n) => n * rowsPer.getOrElse(s, 0L) }.sum
-      case None =>
-        hist.join(distributedSurfaceMap(hist.select($"surface"), dict), Seq("surface"))
-          .agg(coalesce(sum($"count"), lit(0L))).head().getLong(0)
-    }
+    }(hist.join(distributedSurfaceMap(hist.select($"surface"), dict), Seq("surface"))
+      .agg(coalesce(sum($"count"), lit(0L))).head().getLong(0))
   }
 
-  /** The local-vs-distributed size gate of [[link]] and [[linkedCount]]:
-    * the driver-local surface map when the probed distinct surfaces (a
-    * `limit(maxLocal + 1)` collect) and the dictionary both fit, else None.
-    * The dictionary already has to fit the driver for the exact phase's
-    * broadcast join either way. */
-  private def localMapUnderGate(probedSurfaces: Array[String],
-      dict: Dataset[DictEntry], maxLocal: Int): Option[Array[(String, String, String)]] =
-    if (probedSurfaces.length > maxLocal) None
-    else {
-      val dictProbe = dict.limit(maxLocal + 1).collect()
-      if (dictProbe.length > maxLocal) None
-      else Some(localSurfaceMap(probedSurfaces, dictProbe))
-    }
+  /** The local-vs-distributed switch of [[link]] and [[linkedCount]], two
+    * [[graft.ops.Gate]]s in a row: `local(probed rows, surface map)` when
+    * the surface-keyed probe and then the dictionary each have at most
+    * `maxLocal` rows, else `distributed`. The dictionary already has to
+    * fit the driver for the exact phase's broadcast join either way. */
+  private def localMapUnderGate[T, R](probe: Dataset[T], surface: T => String,
+      dict: Dataset[DictEntry], maxLocal: Int)
+      (local: (Array[T], Array[(String, String, String)]) => R)(distributed: => R): R =
+    Gate.localOr(probe, maxLocal) { rows =>
+      Gate.localOr(dict, maxLocal) { d =>
+        local(rows, localSurfaceMap(rows.map(surface), d))
+      }(distributed)
+    }(distributed)
 
   /** Driver-local (surface → entity, method) map — the under-gate path.
     * The whole linking decision is a pure function of (distinct surfaces,

@@ -11,12 +11,11 @@ import Model._
   *
   * Session defaults for scale are set in [[session]]: AQE on (coalescing +
   * skew-join splitting), shuffle partitions sized to cores (overridable),
-  * broadcast threshold left at default. Broadcast/local decisions in the
-  * pipeline stages are size-gated at runtime: EntityLinking collects its
-  * bestPerNorm LSH table into a broadcast local relation only under a row
-  * bound, Canonicalize switches between a driver-local union-find and the
-  * distributed large-star/small-star loop on an edge-count gate, and
-  * everything else lets AQE pick the join strategy from observed sizes.
+  * broadcast threshold left at default. Linking and CC pick a driver-local
+  * or a distributed algorithm through [[graft.ops.Gate]] (EntityLinking:
+  * the surface map on the driver under a row bound; Canonicalize: union-find
+  * under a distinct-edge bound, else the hash-min propagation loop).
+  * Everything else lets AQE pick the join strategy from observed sizes.
   */
 object KgPipeline {
 

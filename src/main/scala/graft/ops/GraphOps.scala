@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over co-occurrence graphs — the KG-side consumers of the
@@ -29,19 +29,6 @@ import org.apache.spark.sql.functions._
   *    drift between engines, partitionings, or replays.
   */
 object GraphOps {
-
-  /** Pin a small intermediate relation for multi-pass consumption.
-    *
-    * Deliberate deviation from the repo's no-cache-on-the-hot-path rule
-    * (BENCH.md): that rule exists for corpus-sized text relations; these
-    * are edge lists — O(m) longs, ~16 bytes/row, disk-spillable — and the
-    * triangle/CC shapes consume them 2+ times (count-gate plus collect or
-    * join fan-out). Released explicitly once the last pass completes
-    * (round-7 VERDICT #4) wherever the terminal action happens inside the
-    * operator; the above-gate join pipelines keep the GraphX idiom (cache
-    * the graph, iterate, let LRU evict). */
-  private def pinned(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Per-group member cap for [[coOccurrenceEdges]] (same role as
     * DedupOps.BUCKET_CAP): groups beyond the cap keep their `cap` smallest
@@ -92,19 +79,25 @@ object GraphOps {
     degrees(edges)
       .groupBy(col("deg").as("degree")).agg(count(lit(1)).as("n_nodes"))
 
-  /** Edge-count gate for the triangle/CC local-index fast path: below it
-    * the oriented edge list (≤ 64 MB of longs at the gate) is exactly what
-    * a broadcast join would ship to every executor anyway, so the operator
-    * collects it ONCE, builds a compact rank-relabelled CSR adjacency, and
-    * broadcasts that instead of paying 2 broadcast-hash-relation builds
-    * plus a 10·m-row wedge stream (measured 4× on the 1.2M-edge bench
-    * graph). Above it, the plan degrades to shuffled equi-joins (the only
-    * memory-safe option at 10⁹ edges). Same spirit — and the same judged
-    * precedent — as kg.Canonicalize.LOCAL_CC_MAX_EDGES: the collect is
-    * bounded by the gate, the driver does only index construction (the
-    * work it would do building a broadcast hash relation), and all
-    * counting work stays distributed. */
+  /** Edge-count [[Gate]] of the triangle/CC/PageRank driver-local paths:
+    * below it the edge list is what a broadcast join would ship to every
+    * executor anyway, so the operator collects it ONCE. Triangles then
+    * broadcast a compact rank-relabelled CSR adjacency instead of paying 2
+    * broadcast-hash-relation builds plus a 10·m-row wedge stream (measured
+    * 4× on the 1.2M-edge bench graph); the driver only builds the index and
+    * all counting stays distributed. Above it, shuffled equi-joins (the only
+    * memory-safe option at 10⁹ edges). Same precedent as
+    * kg.Canonicalize.LOCAL_CC_MAX_EDGES. The collect decodes into boxed
+    * `Tuple2[Long, Long]` rows (~60 bytes each with their two boxed longs)
+    * on top of the collected UnsafeRow copies: ~300–400 MB of driver heap
+    * at the gate, not the 64 MB the raw longs would take. */
   val BROADCAST_EDGE_LIMIT = 4000000L
+
+  /** The edge list as `(u, v)` longs — the rows each gate collects. */
+  private def longEdges(edges: DataFrame): Dataset[(Long, Long)] = {
+    import edges.sparkSession.implicits._
+    edges.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
+  }
 
   /** Per-node triangle counts: (n, n_triangles), nodes in ≥ 1 triangle.
     *
@@ -115,17 +108,9 @@ object GraphOps {
     * reproduces it. Two physical paths with identical results (gate
     * scaladoc above): broadcast-CSR sorted-array intersections under the
     * gate, oriented wedge self-join + closing equi-join above it. */
-  def triangleCounts(rawEdges: DataFrame): DataFrame = {
-    val edges = pinned(rawEdges)
-    // one action on the pinned list decides the strategy — the same
-    // measured-size-driven switch AQE makes, but against the EDGE count,
-    // which AQE cannot see past the wedge join's own output statistics.
-    // A failed probe releases the pin; above the gate the joined plan
-    // keeps it (the GraphX cache-the-graph idiom).
-    val m = try edges.count() catch { case t: Throwable => edges.unpersist(false); throw t }
-    if (m <= BROADCAST_EDGE_LIMIT) triangleCountsIndexed(edges)
-    else triangleCountsJoined(edges)
-  }
+  def triangleCounts(edges: DataFrame): DataFrame =
+    Gate.localOr(longEdges(edges), BROADCAST_EDGE_LIMIT.toInt)(
+      triangleCountsIndexed(edges.sparkSession, _))(triangleCountsJoined(edges))
 
   /** CSR adjacency of the degree-ordered orientation: nodes relabelled to
     * their rank in ascending (degree, id) — ranks fit an Int under the
@@ -166,16 +151,12 @@ object GraphOps {
     (rankToId, offs, nbrs)
   }
 
-  /** Under-gate path: broadcast the CSR index, intersect neighbor lists
-    * distributed over hash-spread node ranges, partial-aggregate the
-    * emitted triangle corners. The collect is gate-bounded (≤ 64 MB); the
-    * edge pin is released as soon as the collect lands or fails. */
-  private def triangleCountsIndexed(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  /** Under-gate path over the gate's collected edges: broadcast the CSR
+    * index, intersect neighbor lists distributed over hash-spread node
+    * ranges, partial-aggregate the emitted triangle corners. */
+  private def triangleCountsIndexed(spark: SparkSession,
+      ev: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val ev = try edges.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].collect()
-    finally edges.unpersist(false)
     val (rankToId, offs, nbrs) = csrOriented(ev)
     val n = rankToId.length
     val bc = spark.sparkContext.broadcast((rankToId, offs, nbrs))
@@ -216,7 +197,15 @@ object GraphOps {
     * (degree, id) rank, so the closing edge — if present — is stored
     * exactly as (lower-rank, higher-rank): one keyed equi-join, no
     * orientation disjunction. */
-  private[ops] def triangleCountsJoined(edges: DataFrame): DataFrame = {
+  private[ops] def triangleCountsJoined(rawEdges: DataFrame): DataFrame = {
+    // the input and the oriented list are each read 2+ times (degrees plus
+    // join fan-out): pinned, then left to LRU (the GraphX cache-the-graph
+    // idiom). A deliberate deviation from the no-cache-on-the-hot-path rule
+    // (BENCH.md), which is for corpus-sized text relations; these are edge
+    // lists — O(m) longs, ~16 bytes/row, disk-spillable.
+    def pinned(df: DataFrame): DataFrame =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = pinned(rawEdges)
     val deg = degrees(edges)
     val withDeg = edges
       .join(deg.select(col("n").as("u"), col("deg").as("du")), "u")
@@ -264,38 +253,40 @@ object GraphOps {
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    // released however the gate's probe and collect end; above the gate
-    // the loop's first localCheckpoint has materialized sym, so the pin
-    // has served its purpose (round-7 VERDICT #4: no pins left behind)
-    try {
-      if (e.count() <= BROADCAST_EDGE_LIMIT)
-        spark.createDataset(localComponents(e.as[(Long, Long)].collect()).toIndexedSeq)
-          .toDF("n", "component")
-      else distributedComponents(e, maxIter)
-    } finally e.unpersist(false)
+    val e = longEdges(edges)
+    Gate.localOr(e, BROADCAST_EDGE_LIMIT.toInt) { ev =>
+      spark.createDataset(localComponents(ev).toIndexedSeq).toDF("n", "component")
+    }(distributedComponents(e.toDF(), maxIter))
+  }
+
+  /** Int-interns the endpoints of a collected edge list in first-seen
+    * order: `ids(k)` is node k's id and edge i is `(us(i), vs(i))`. */
+  private[ops] def internEdges(ev: Array[(Long, Long)])
+      : (Array[Long], Array[Int], Array[Int]) = {
+    // boxed value type: get must distinguish "absent" (null) from rank 0
+    val idx = new java.util.HashMap[Long, java.lang.Integer]()
+    val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+    val us = new Array[Int](ev.length)
+    val vs = new Array[Int](ev.length)
+    def intern(x: Long): Int = {
+      val cur = idx.get(x)
+      if (cur == null) {
+        val i = idx.size
+        idx.put(x, i); ids += x; i
+      } else cur.intValue()
+    }
+    var i = 0
+    while (i < ev.length) {
+      us(i) = intern(ev(i)._1); vs(i) = intern(ev(i)._2); i += 1
+    }
+    (ids.result(), us, vs)
   }
 
   /** Driver-local union-find (path-compressed, union by size, min-id label
     * tracked per root) over rank-relabelled int nodes. Bounded by the
     * [[BROADCAST_EDGE_LIMIT]] gate. */
   private[ops] def localComponents(ev: Array[(Long, Long)]): Array[(Long, Long)] = {
-    // boxed value type: get must distinguish "absent" (null) from rank 0
-    val idx = new java.util.HashMap[Long, java.lang.Integer]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def intern(x: Long): Int = {
-      val cur = idx.get(x)
-      if (cur == null) {
-        val i = ids.length
-        idx.put(x, i); ids += x; i
-      } else cur.intValue()
-    }
-    val us = new Array[Int](ev.length)
-    val vs = new Array[Int](ev.length)
-    var i = 0
-    while (i < ev.length) {
-      us(i) = intern(ev(i)._1); vs(i) = intern(ev(i)._2); i += 1
-    }
+    val (ids, us, vs) = internEdges(ev)
     val n = ids.length
     val parent = Array.tabulate(n)(identity)
     val size = Array.fill(n)(1)
@@ -308,7 +299,7 @@ object GraphOps {
       }
       x
     }
-    i = 0
+    var i = 0
     while (i < ev.length) {
       val ra = find(us(i)); val rb = find(vs(i))
       if (ra != rb) {
@@ -331,8 +322,12 @@ object GraphOps {
     * longer-chain graph), the labels returned would be mid-propagation —
     * that case logs a warning instead of passing silently. */
   private[ops] def distributedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val sym = edges.select(col("u").as("s"), col("v").as("d"))
-      .unionAll(edges.select(col("v").as("s"), col("u").as("d")))
+    // both directions from ONE read of the edges (the degrees() shape)
+    val sym = edges
+      .select(explode(array(
+        struct(col("u").as("s"), col("v").as("d")),
+        struct(col("v").as("s"), col("u").as("d")))).as("e"))
+      .select(col("e.s"), col("e.d"))
       .localCheckpoint()
     var labels = sym.select(col("s").as("n")).distinct()
       .withColumn("l", col("n")).localCheckpoint()
@@ -401,18 +396,12 @@ object GraphOps {
       "seed*(1-damping) must be integer so the per-hop base is exact")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = pinned(edges.select(col("u").cast("long"), col("v").cast("long")))
-    // released however the gate's probe and collect end; above the gate
-    // the joined pipeline re-derives from the raw edges (unchanged
-    // round-7 shape: per-hop exchange reuse, no pin — a cache was
-    // measured SLOWER than recompute here, 2.36 s vs 1.67 s at sf0.1)
-    try {
-      if (e.count() <= BROADCAST_EDGE_LIMIT)
-        spark.createDataset(localPageRankCredits(e.as[(Long, Long)].collect(),
-            iters, seed, dampNum, dampDen).toIndexedSeq)
-          .toDF("n", "c")
-      else pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen)
-    } finally e.unpersist(false)
+    // above the gate: no pin — per-hop exchange reuse; a cache measured
+    // SLOWER than recompute here (2.36 s vs 1.67 s at sf0.1)
+    Gate.localOr(longEdges(edges), BROADCAST_EDGE_LIMIT.toInt) { ev =>
+      spark.createDataset(localPageRankCredits(ev, iters, seed, dampNum, dampDen)
+        .toIndexedSeq).toDF("n", "c")
+    }(pageRankCreditsJoined(edges, iters, seed, dampNum, dampDen))
   }
 
   /** Driver-local integer-credit hops over int-interned nodes; bounded by
@@ -422,24 +411,10 @@ object GraphOps {
   private[ops] def localPageRankCredits(ev: Array[(Long, Long)], iters: Int,
       seed: Long, dampNum: Long, dampDen: Long): Array[(Long, Long)] = {
     val base = seed * (dampDen - dampNum) / dampDen
-    val idx = new java.util.HashMap[Long, java.lang.Integer]()
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def intern(x: Long): Int = {
-      val cur = idx.get(x)
-      if (cur == null) {
-        val i = ids.length
-        idx.put(x, i); ids += x; i
-      } else cur.intValue()
-    }
-    val us = new Array[Int](ev.length)
-    val vs = new Array[Int](ev.length)
-    var i = 0
-    while (i < ev.length) {
-      us(i) = intern(ev(i)._1); vs(i) = intern(ev(i)._2); i += 1
-    }
+    val (ids, us, vs) = internEdges(ev)
     val n = ids.length
     val deg = new Array[Long](n)
-    i = 0
+    var i = 0
     while (i < ev.length) { deg(us(i)) += 1; deg(vs(i)) += 1; i += 1 }
     var credit = Array.fill(n)(seed)
     var hop = 0

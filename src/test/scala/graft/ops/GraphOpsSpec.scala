@@ -175,9 +175,9 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("gated operators leave no pinned RDDs behind (round-7 VERDICT #4)") {
-    // the under-gate paths pin the edge list for the count+collect passes
-    // and must release it once the collect lands — a long-lived session
-    // issuing many graph queries must not accumulate pinned blocks
+    // the gates probe and fetch in one capped collect and pin nothing — a
+    // long-lived session issuing many graph queries must not accumulate
+    // pinned blocks
     val before = spark.sparkContext.getPersistentRDDs.size
     GraphOps.triangleCounts(edges).collect()
     GraphOps.connectedComponents(edges).collect()
