@@ -3,26 +3,15 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import Model.TripleRow
-import graft.ops.Gate
+import graft.ops.GraphOps
 
 /** Entity canonicalization via connected components over owl:sameAs edges
-  * (SURVEY.md §2.5): iterative DataFrame hash-min label propagation —
-  * every vertex converges to the lexicographically smallest IRI in its
-  * component, which becomes the canonical id.
-  *
-  * Scale design (north_rule: "partitioning / shuffle / skew handled
-  * explicitly"):
-  *  - edges are deduplicated BEFORE the loop — hub entities appear in ~20%
-  *    of documents, so raw edge multiplicity is power-law; dedup collapses
-  *    it to vocabulary scale and is itself skew-safe (partial aggregation
-  *    does the heavy lifting map-side).
-  *  - the propagation join keys on vertex id AFTER dedup, so hub skew is
-  *    bounded by max degree, and AQE skew-join splitting
-  *    (spark.sql.adaptive.skewJoin) covers residual imbalance.
-  *  - `localCheckpoint` each iteration truncates the lineage so plan size
-  *    doesn't grow O(iterations) (SURVEY.md §4).
-  *  - convergence in O(log diameter) iterations for min-propagation on these
-  *    star-shaped alias clusters (typically 2).
+  * (SURVEY.md §2.5): every vertex is labeled with the smallest IRI of its
+  * component (UTF-8 byte order, the order Spark's `min` applies), which
+  * becomes the canonical id. The algorithm, its convergence bound
+  * (O(log diameter) rounds above the gate) and its non-convergence warning
+  * are [[graft.ops.GraphOps.components]]'; this object dedups the string
+  * edges, sets the size gate and names the columns.
   */
 object Canonicalize {
 
@@ -31,8 +20,8 @@ object Canonicalize {
     * predicates are pushed down.
     *
     * NOT deduplicated here: [[connectedComponents]] dedups once as part of
-    * its size-gate probe (and union-find is idempotent per edge anyway), so
-    * deduping here too would just add a second shuffle. */
+    * its size-gate probe, so deduping here too would just add a second
+    * shuffle. */
   def sameAsEdges(triples: Dataset[TripleRow]): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
@@ -50,101 +39,40 @@ object Canonicalize {
     * a 32 g driver — safe to collect. */
   val LOCAL_CC_MAX_EDGES = 1000000
 
-  /** Hash-min connected components. Input: (src, dst) string edges.
-    * Output: (id, canonical) — every vertex labeled with the
-    * lexicographically smallest IRI of its component.
+  /** Connected components: (id, canonical) — every vertex labeled with the
+    * smallest IRI of its component. Input: (src, dst) string edges.
     *
-    * Two physical paths with identical results:
+    * Two physical paths with identical results, picked by
+    * [[graft.ops.GraphOps.components]]:
     *  - ≤ LOCAL_CC_MAX_EDGES DISTINCT edges: driver-local union-find (the
     *    result is a local relation, so downstream joins against it
     *    broadcast without stats guessing). sameAs alias graphs are
     *    vocabulary-scale in most corpora even when the corpus is 100 TB.
-    *  - otherwise: distributed hash-min label propagation with AQE skew
-    *    handling and lineage-truncating checkpoints.
+    *  - otherwise: [[distributedCC]]'s loop.
     *
-    * The gate deduplicates BEFORE probing (round 3): hub entities give the
-    * raw edge stream power-law multiplicity — at 4M synthetic pages there
-    * are ~600k raw but only ~6k distinct edges, and a raw-count gate was
-    * routing this vocabulary-scale graph to the (fixed-latency-dominated,
-    * scaling-hostile) distributed loop. The dedup's map-side partial
+    * The gate deduplicates BEFORE probing (round 3): hub entities appear in
+    * ~20% of documents, so the raw edge stream has power-law multiplicity —
+    * at 4M synthetic pages there are ~600k raw but only ~6k distinct edges,
+    * and a raw-count gate was routing this vocabulary-scale graph to the
+    * (fixed-latency-dominated, scaling-hostile) distributed loop. The dedup's map-side partial
     * aggregation collapses multiplicity before the shuffle, and the
-    * distributed path pays the same dedup anyway (sym.distinct), so the
-    * probe's only over-gate cost is one upstream pass — the price of not
-    * caching, already the pipeline's documented trade. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
+    * distributed path pays the same dedup anyway, so the probe's only
+    * over-gate cost is one upstream pass — the price of not caching,
+    * already the pipeline's documented trade. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    GraphOps.components(distinctEdges(edges), LOCAL_CC_MAX_EDGES, maxIter)(
+      GraphOps.Utf8Order, implicitly).toDF("id", "canonical")
 
-    Gate.localOr(edges.select($"src", $"dst").distinct().as[(String, String)],
-        LOCAL_CC_MAX_EDGES) { probe =>
-      spark.createDataset(localUnionFind(probe).toSeq).toDF("id", "canonical")
-    }(distributedCC(edges, maxIter))
-  }
+  /** The distributed pointer-doubling loop (taken above LOCAL_CC_MAX_EDGES;
+    * directly callable in tests to cover the at-scale path on small
+    * inputs). */
+  def distributedCC(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    GraphOps.distributedComponents(distinctEdges(edges).toDF("u", "v"), maxIter)
+      .toDF("id", "canonical")
 
-  /** The distributed hash-min loop (taken above LOCAL_CC_MAX_EDGES; directly
-    * callable in tests to cover the at-scale path on small inputs). */
-  def distributedCC(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    // symmetrize once; the propagation below then only needs src→dst flow
-    val sym = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint()
-
-    var labels = sym.select($"src".as("id")).distinct()
-      .withColumn("label", $"id")
-      .localCheckpoint()
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(sym("dst").as("id"), labels("label"))
-      val nextPlan = msgs.union(labels.select($"id", $"label"))
-        .groupBy($"id").agg(min($"label").as("label"))
-      // lineage truncation matters for long chains; for the common 2-3
-      // iteration case, checkpointing every other round halves the extra
-      // materialization jobs on the critical path
-      val next = if (iter % 2 == 1 || iter >= 3) nextPlan.localCheckpoint()
-        else nextPlan
-      // star-shaped alias clusters converge in 2 iterations; skip the
-      // convergence probe (an extra job) until they could possibly be done
-      val changed =
-        if (iter < 2) 1L
-        else next.as("n")
-          .join(labels.as("o"), $"n.id" === $"o.id")
-          .filter($"n.label" =!= $"o.label")
-          .limit(1).count() // any-change probe, cheap
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    labels.select($"id", $"label".as("canonical"))
-  }
-
-  /** Driver-local union-find with path compression; representative =
-    * lexicographically smallest vertex (matches hash-min fixpoint). */
-  def localUnionFind(edges: Array[(String, String)]): Map[String, String] = {
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        // union by min keeps the representative the smallest label
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    parent.keys.map(v => v -> find(v)).toMap
+  private def distinctEdges(edges: DataFrame): Dataset[(String, String)] = {
+    import edges.sparkSession.implicits._
+    edges.select($"src", $"dst").distinct().as[(String, String)]
   }
 
   /** Rewrite triples so subjects/objects use canonical entity ids.
@@ -154,10 +82,10 @@ object Canonicalize {
     * NO forced broadcast() hint: the label table is sized by the number of
     * distinct IRIs in sameAs components — corpus-scale at 100 TB, not
     * vocabulary-scale — so a forced broadcast is a driver/executor OOM.
-    * The labels come out of the CC loop localCheckpoint'ed, so AQE has real
-    * size stats and picks broadcast when (and only when) the table is under
-    * spark.sql.autoBroadcastJoinThreshold, falling back to sort-merge with
-    * skew-join splitting above it. */
+    * The labels come out of CC as a local relation or checkpointed, so AQE
+    * has real size stats and picks broadcast when (and only when) the table
+    * is under spark.sql.autoBroadcastJoinThreshold, falling back to
+    * sort-merge with skew-join splitting above it. */
   def canonicalizeTriples(triples: Dataset[TripleRow], labels: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._

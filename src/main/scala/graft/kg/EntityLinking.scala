@@ -194,7 +194,7 @@ object EntityLinking {
     * replaces ~10 tiny scheduler stages (distinct → normalize → exact
     * join → anti join → band flatMaps → band join → dedup → UDF → groupBy
     * → collect) — the same tiny-data-wants-a-local-algorithm trade as
-    * Canonicalize's union-find path. Semantics are identical to
+    * the union-find path of GraphOps.components. Semantics are identical to
     * [[distributedSurfaceMap]] (tested both ways): exact matches emit one
     * row per matching dict entry; misses take the best LSH candidate by
     * (jaccard, iri) — the tuple ordering Spark's

@@ -13,8 +13,9 @@ import Model._
   * skew-join splitting), shuffle partitions sized to cores (overridable),
   * broadcast threshold left at default. Linking and CC pick a driver-local
   * or a distributed algorithm through [[graft.ops.Gate]] (EntityLinking:
-  * the surface map on the driver under a row bound; Canonicalize: union-find
-  * under a distinct-edge bound, else the hash-min propagation loop).
+  * the surface map on the driver under a row bound; Canonicalize: GraphOps'
+  * connected-components operator — union-find under a distinct-edge bound,
+  * else the pointer-doubling propagation loop).
   * Everything else lets AQE pick the join strategy from observed sizes.
   */
 object KgPipeline {
@@ -78,8 +79,8 @@ object KgPipeline {
     val linkedCountF = Future(EntityLinking.linkedCount(triples))
 
     val edges = Canonicalize.sameAsEdges(triples)
-    // size-gated: driver-local union-find under the edge bound, else the
-    // distributed loop (which localCheckpoints per iteration)
+    // size-gated: driver-local union-find under the distinct-edge bound,
+    // else GraphOps' pointer-doubling loop
     val labels = Canonicalize.connectedComponents(edges)
 
     val canonical = Canonicalize.canonicalizeTriples(triples, labels)

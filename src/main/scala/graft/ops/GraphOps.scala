@@ -1,7 +1,9 @@
 package graft.ops
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Graph analytics over co-occurrence graphs — the KG-side consumers of the
   * pipeline's entity/triple output (degree census, clustering structure,
@@ -86,8 +88,8 @@ object GraphOps {
     * broadcast-hash-relation builds plus a 10·m-row wedge stream (measured
     * 4× on the 1.2M-edge bench graph); the driver only builds the index and
     * all counting stays distributed. Above it, shuffled equi-joins (the only
-    * memory-safe option at 10⁹ edges). Same precedent as
-    * kg.Canonicalize.LOCAL_CC_MAX_EDGES. The collect decodes into boxed
+    * memory-safe option at 10⁹ edges). kg.Canonicalize gates its string
+    * edges at its own LOCAL_CC_MAX_EDGES. The collect decodes into boxed
     * `Tuple2[Long, Long]` rows (~60 bytes each with their two boxed longs)
     * on top of the collected UnsafeRow copies: ~300–400 MB of driver heap
     * at the gate, not the 64 MB the raw longs would take. */
@@ -233,42 +235,46 @@ object GraphOps {
 
   /** Connected components of an undirected edge list: (n, component) with
     * component = the SMALLEST node id in n's component — deterministic,
-    * partition-invariant, engine-independent (pure min, no float).
+    * partition-invariant, engine-independent (pure min, no float). Runs
+    * [[components]] under the [[BROADCAST_EDGE_LIMIT]] gate. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
+    components(longEdges(edges), BROADCAST_EDGE_LIMIT.toInt, maxIter)
+
+  /** String order of Spark's `min` over a string column: UTF-8 bytes,
+    * unsigned. Scala's default String order compares UTF-16 units and
+    * disagrees with it above U+FFFF (U+FFFD < U+1D538 in bytes, not in
+    * units), so string [[components]] must use this one. */
+  private[graft] val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
+
+  /** The one connected-components operator, generic over the node id type
+    * (Long graph ids here, sameAs IRIs in kg.Canonicalize): (n, component)
+    * with component = the `ord`-smallest node of n's component. `ord` must
+    * agree with Spark's `min` on K so that both paths label identically.
     *
-    * Two physical paths with identical results (the
-    * kg.Canonicalize.connectedComponents pattern, long-typed):
-    *  - ≤ [[BROADCAST_EDGE_LIMIT]] edges: one gate-bounded collect (the
-    *    bytes a broadcast join would ship anyway) + driver union-find with
-    *    path compression — the result relation is node-scale and LOCAL, so
-    *    downstream joins against it broadcast without stats guessing;
-    *  - above: hash-min propagation WITH pointer doubling — each round one
-    *    keyed join + partial-agg min shuffle, then l(n) := l(l(n)) via a
-    *    label-keyed self-join. The shortcut halves every label chain per
-    *    round, so convergence is O(log diameter) instead of O(diameter)
-    *    (a 40-node path converges in ~6 rounds where plain propagation
-    *    needs 40). The label self-join key is skewed toward popular labels
-    *    by construction — AQE skew-join splitting is on session-wide.
-    *    localCheckpoint truncates lineage every round; the convergence
-    *    probe is an any-change limit(1).count — O(1) result, one job. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = longEdges(edges)
-    Gate.localOr(e, BROADCAST_EDGE_LIMIT.toInt) { ev =>
-      spark.createDataset(localComponents(ev).toIndexedSeq).toDF("n", "component")
-    }(distributedComponents(e.toDF(), maxIter))
-  }
+    * Two physical paths with identical results:
+    *  - ≤ maxLocal edges: one [[Gate]]-bounded collect + driver union-find
+    *    ([[localComponents]]) — the result relation is node-scale and
+    *    LOCAL, so downstream joins against it broadcast without stats
+    *    guessing;
+    *  - above: hash-min propagation WITH pointer doubling
+    *    ([[distributedComponents]]). */
+  private[graft] def components[K](edges: Dataset[(K, K)], maxLocal: Int,
+      maxIter: Int)(implicit ord: Ordering[K], tag: ClassTag[K]): DataFrame =
+    Gate.localOr(edges, maxLocal) { ev =>
+      edges.sparkSession.createDataset(localComponents(ev).toIndexedSeq)(edges.encoder)
+        .toDF("n", "component")
+    }(distributedComponents(edges.toDF("u", "v"), maxIter))
 
   /** Int-interns the endpoints of a collected edge list in first-seen
     * order: `ids(k)` is node k's id and edge i is `(us(i), vs(i))`. */
-  private[ops] def internEdges(ev: Array[(Long, Long)])
-      : (Array[Long], Array[Int], Array[Int]) = {
+  private[ops] def internEdges[K: ClassTag](ev: Array[(K, K)])
+      : (Array[K], Array[Int], Array[Int]) = {
     // boxed value type: get must distinguish "absent" (null) from rank 0
-    val idx = new java.util.HashMap[Long, java.lang.Integer]()
-    val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+    val idx = new java.util.HashMap[K, java.lang.Integer]()
+    val ids = Array.newBuilder[K]
     val us = new Array[Int](ev.length)
     val vs = new Array[Int](ev.length)
-    def intern(x: Long): Int = {
+    def intern(x: K): Int = {
       val cur = idx.get(x)
       if (cur == null) {
         val i = idx.size
@@ -282,15 +288,16 @@ object GraphOps {
     (ids.result(), us, vs)
   }
 
-  /** Driver-local union-find (path-compressed, union by size, min-id label
-    * tracked per root) over rank-relabelled int nodes. Bounded by the
-    * [[BROADCAST_EDGE_LIMIT]] gate. */
-  private[ops] def localComponents(ev: Array[(Long, Long)]): Array[(Long, Long)] = {
+  /** Driver-local union-find (path-compressed, union by size, `ord`-min
+    * label tracked per root) over int-interned nodes. Bounded by the
+    * caller's gate. */
+  private[ops] def localComponents[K: ClassTag](ev: Array[(K, K)])
+      (implicit ord: Ordering[K]): Array[(K, K)] = {
     val (ids, us, vs) = internEdges(ev)
     val n = ids.length
     val parent = Array.tabulate(n)(identity)
     val size = Array.fill(n)(1)
-    val minId = Array.tabulate(n)(ids(_))
+    val minId = ids.clone()
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) {
@@ -306,22 +313,32 @@ object GraphOps {
         val (big, small) = if (size(ra) >= size(rb)) (ra, rb) else (rb, ra)
         parent(small) = big
         size(big) += size(small)
-        if (minId(small) < minId(big)) minId(big) = minId(small)
+        if (ord.lt(minId(small), minId(big))) minId(big) = minId(small)
       }
       i += 1
     }
     Array.tabulate(n)(k => (ids(k), minId(find(k))))
   }
 
-  /** The distributed pointer-doubling loop (taken above the gate; directly
-    * callable in tests to cover the at-scale path on small inputs).
+  /** The distributed loop over `(u, v)` edges of any id type Spark's `min`
+    * orders (taken above the gate; directly callable in tests to cover the
+    * at-scale path on small inputs): hash-min propagation WITH pointer
+    * doubling — each round one keyed join + partial-agg min shuffle, then
+    * l(n) := l(l(n)) via a label-keyed self-join. The shortcut halves every
+    * label chain per round, so convergence is O(log diameter) instead of
+    * O(diameter) (a 40-node path converges in ~6 rounds where plain
+    * propagation needs 40). The label self-join key is skewed toward
+    * popular labels by construction — AQE skew-join splitting is on
+    * session-wide. localCheckpoint truncates lineage every round; the
+    * convergence probe is an any-change limit(1).count — O(1) result, one
+    * job.
     *
     * Convergence bound (round-7 ADVICE): doubling halves label chains each
     * round, so graphs of diameter up to ~2^maxIter converge; if the loop
     * exhausts maxIter with labels still changing (a pathological
     * longer-chain graph), the labels returned would be mid-propagation —
     * that case logs a warning instead of passing silently. */
-  private[ops] def distributedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  private[graft] def distributedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // both directions from ONE read of the edges (the degrees() shape)
     val sym = edges
       .select(explode(array(
@@ -347,8 +364,7 @@ object GraphOps {
         .select(col("a.m").as("n"), coalesce(col("l2"), col("a.l1")).as("l"))
         .localCheckpoint()
       // round 0 always changes labels on any graph with an edge — skip
-      // the probe job there (same trick as the KG loop's iter<2 skip,
-      // conservative by one round because doubling converges faster)
+      // the probe job there
       val changed =
         if (iter < 1) 1L
         else next.select(col("n"), col("l").as("ln"))

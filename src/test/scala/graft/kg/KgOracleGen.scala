@@ -288,7 +288,7 @@ object KgOracleGen {
     // components via union-find over the sameAs edges (when anchored, the
     // edge set is proven identical to the reference's above) — independent
     // of the Spark CC implementation under test
-    val canonical = Canonicalize.localUnionFind(edges.result().distinct.toArray)
+    val canonical = localUnionFind(edges.result().distinct.toArray)
 
     val tripleCols = Seq("url" -> "VARCHAR", "block" -> "INTEGER",
       "subj" -> "VARCHAR", "subj_kind" -> "VARCHAR", "pred" -> "VARCHAR",
@@ -314,6 +314,32 @@ object KgOracleGen {
       "kg_triples_sql" -> valuesSql(tripleCols.filterNot(_._1 == "block"),
         sqlRows.result()))
     (sqls, asserts)
+  }
+
+  /** Driver-local union-find with path compression; representative =
+    * lexicographically smallest vertex (matches hash-min fixpoint). The
+    * oracle's own union-find, independent of the GraphOps operator under
+    * test; its UTF-16 order equals Spark's UTF-8 byte order on the ASCII
+    * PagesSource aliases. */
+  private def localUnionFind(edges: Array[(String, String)]): Map[String, String] = {
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        // union by min keeps the representative the smallest label
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    parent.keys.map(v => v -> find(v)).toMap
   }
 
   def emit(workDir: Path): Unit = {

@@ -90,11 +90,16 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = Seq(
       ("a", "b"), ("b", "c"), // component {a,b,c}
       ("x", "y"), // component {x,y}
-      ("q", "q")).toDF("src", "dst")
+      ("q", "q"),
+      // U+FFFD sorts below U+1D538 (surrogates D835 DD38) in UTF-8 bytes
+      // (EF… < F0…) but above it in UTF-16 units (FFFD > D835): both paths
+      // must pick the byte-order minimum that Spark's min() picks
+      ("<http://e/\uD835\uDD38>", "<http://e/\uFFFD>")).toDF("src", "dst")
     val labels = Canonicalize.connectedComponents(edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels("a") == "a" && labels("b") == "a" && labels("c") == "a")
     assert(labels("x") == "x" && labels("y") == "x")
+    assert(labels("<http://e/\uD835\uDD38>") == "<http://e/\uFFFD>")
     // the at-scale distributed loop must produce the identical labeling
     val dist = Canonicalize.distributedCC(edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -103,9 +108,9 @@ class KgPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("local and distributed CC agree on a chain (multi-iteration case)") {
     import spark.implicits._
-    // a 12-vertex path graph needs several hash-min iterations; both paths
-    // must converge to min-vertex labeling
-    val vs = (0 until 12).map(i => f"v$i%02d")
+    // a 40-vertex path is longer than one-hop propagation covers in
+    // maxIter = 25 rounds; both paths must converge to min-vertex labeling
+    val vs = (0 until 40).map(i => f"v$i%02d")
     val edges = vs.zip(vs.tail).toDF("src", "dst")
     val local = Canonicalize.connectedComponents(edges).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
