@@ -27,7 +27,7 @@ import graft.ops.SkewOps
 object Bench {
 
   /** (stealJiffies, totalJiffies) from the aggregate cpu line of /proc/stat. */
-  private def cpuJiffies(): (Long, Long) =
+  private[graft] def cpuJiffies(): (Long, Long) =
     try {
       val line = {
         val src = scala.io.Source.fromFile("/proc/stat")

@@ -103,17 +103,6 @@ object ClusterScale {
       .getOrCreate()
   }
 
-  /** (stealJiffies, totalJiffies) — same audit as Bench. */
-  private def cpuJiffies(): (Long, Long) =
-    try {
-      val line = {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try src.getLines().next() finally src.close()
-      }
-      val f = line.trim.split("\\s+").drop(1).map(_.toLong)
-      (if (f.length > 7) f(7) else 0L, f.sum)
-    } catch { case _: Exception => (0L, 1L) }
-
   /** One pipeline run on a fresh local-cluster session. `warmN > 0` first
     * runs a small untimed pipeline pass on the SAME session so the timed
     * run measures JIT-warm executors — the deployment reality (cluster
@@ -131,11 +120,11 @@ object ClusterScale {
       Bench.rmTree(new java.io.File(warmOut))
     }
     val out = java.nio.file.Files.createTempDirectory(base, s"cs-$workers-").toString
-    val (s0, t0j) = cpuJiffies()
+    val (s0, t0j) = Bench.cpuJiffies()
     val t0 = System.nanoTime()
     val r = KgPipeline.run(spark, n, out)
     val dt = (System.nanoTime() - t0) / 1e9
-    val (s1, t1j) = cpuJiffies()
+    val (s1, t1j) = Bench.cpuJiffies()
     spark.stop()
     Bench.rmTree(new java.io.File(out))
     val steal = (s1 - s0).toDouble / math.max(1L, t1j - t0j)
@@ -254,54 +243,7 @@ object ClusterScale {
         s""","probe_steal":${f(steal)}""")
   }
 
-  /** `profile <pages>`: per-stage wall-clock at both worker counts —
-    * attributes separate-JVM scaling loss to a stage. `parse <pages>`:
-    * parse-pass-only scaling (isolates the host-DRAM question). */
-  private def diagnose(diagMode: String, n: Long, coresPerWorker: Int, memMb: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    for (w <- Seq(2, 8, 2, 8)) {
-      val spark = session(w, coresPerWorker, memMb)
-      spark.sparkContext.setLogLevel("WARN")
-      import spark.implicits._
-      def timed[T](name: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"CLUSTERSTAGE w=$w $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-        r
-      }
-      val pages = graft.kg.PagesSource.pages(spark, n)
-      val triples = graft.kg.TripleExtraction.run(pages)
-      if (diagMode == "parse") {
-        // pass 1 absorbs per-executor-JVM JIT; pass 2 is steady state
-        timed("parse(cold)")(triples.filter($"error".isNull).count())
-        timed("parse(warm)")(triples.filter($"error".isNull).count())
-        timed("parse(warm2)")(triples.filter($"error".isNull).count())
-      } else {
-        val base = java.nio.file.Paths.get("/dev/shm/graft-bench")
-        java.nio.file.Files.createDirectories(base)
-        val out = java.nio.file.Files.createTempDirectory(base, "csprof").toString
-        timed("parse(1 pass)")(triples.filter($"error".isNull).count())
-        val linked = graft.kg.EntityLinking.run(triples)
-        timed("linking+count")(linked.count())
-        val edges = graft.kg.Canonicalize.sameAsEdges(triples)
-        val labels = timed("cc")(graft.kg.Canonicalize.connectedComponents(edges))
-        val canonical = graft.kg.Canonicalize.canonicalizeTriples(triples, labels)
-        timed("write+lineage")(graft.kg.Materialize.write(canonical, out))
-        timed("components")(labels.agg(countDistinct($"canonical")).head())
-        Bench.rmTree(new java.io.File(out))
-      }
-      spark.stop()
-    }
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.exists(a => a == "profile" || a == "parse")) {
-      val n = if (args.length > 1) args(1).toLong else 2000000L
-      diagnose(args(0), n,
-        if (args.length > 2) args(2).toInt else 4,
-        if (args.length > 3) args(3).toInt else 8192)
-      return
-    }
     if (args.headOption.contains("session")) {
       // session mode defaults mirror the driver bench's cluster phase:
       // 2M pages, 1-core workers, >= 4 pairs

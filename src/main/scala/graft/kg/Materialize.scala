@@ -293,22 +293,20 @@ object Materialize {
     }
   }
 
-  private def readBucketSidecar(outDir: String): Option[Int] = {
-    val f = new Path(outDir, "_buckets.json")
+  /** UTF-8 contents of the small metadata file `name` in `outDir`, if any. */
+  private def readSmallFile(outDir: String, name: String): Option[String] = {
+    val f = new Path(outDir, name)
     val hfs = f.getFileSystem(hadoopConf)
     if (!hfs.exists(f)) None
     else {
       val in = hfs.open(f)
-      val s = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     }
   }
+
+  private def readBucketSidecar(outDir: String): Option[Int] =
+    readSmallFile(outDir, "_buckets.json").flatMap(s =>
+      "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt))
 
   /** Manifest = commit point. Written to a temp file then atomically renamed. */
   def writeManifest(outDir: String, numBuckets: Int, buckets: Set[Int]): Unit = {
@@ -333,26 +331,14 @@ object Materialize {
   def readManifest(outDir: String): Set[Int] = readManifestFull(outDir)._2
 
   /** (numBuckets if a manifest exists, completed buckets). */
-  def readManifestFull(outDir: String): (Option[Int], Set[Int]) = {
-    val f = new Path(outDir, "_manifest.json")
-    val hfs = f.getFileSystem(hadoopConf)
-    if (!hfs.exists(f)) (None, Set.empty)
-    else {
-      val in = hfs.open(f)
-      val s = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
+  def readManifestFull(outDir: String): (Option[Int], Set[Int]) =
+    readSmallFile(outDir, "_manifest.json").fold((Option.empty[Int], Set.empty[Int])) { s =>
       val nb = "\"numBuckets\":([0-9]+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
       val done = "\"completedBuckets\":\\[([0-9,]*)\\]".r.findFirstMatchIn(s)
         .map(_.group(1)).filter(_.nonEmpty)
         .map(_.split(",").map(_.toInt).toSet).getOrElse(Set.empty)
       (nb, done)
     }
-  }
 
   def readTriples(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/triples")

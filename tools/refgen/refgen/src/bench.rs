@@ -1,7 +1,7 @@
 //! Reference-throughput bench: times the ACTUAL reference implementation
 //! (harriet compiled unmodified from /root/reference, entry points
 //! examples/parse.rs:10 and examples/triples.rs:12) over the same corpus
-//! the Scala `graft.ParseBench` measures, with the same loop structure
+//! the Scala `graft.Probe turtle` measures, with the same loop structure
 //! (whole-corpus reps, multiple rounds, best round wins) so the
 //! MB/s-per-core numbers are directly comparable.
 //!
@@ -99,7 +99,7 @@ fn main() {
         );
     }
 
-    // end-to-end parse+produce (the Scala ParseBench headline loop)
+    // end-to-end parse+produce (the Scala `graft.Probe turtle` parse+produce loop)
     for round in 1..=3 {
         let t0 = Instant::now();
         let mut triples = 0usize;
